@@ -3,7 +3,7 @@ session lifecycle around it.
 
 The library's defaults target a large host (a 16g driver heap, scratch
 under the source tree), so every run here sizes the heap from host RAM,
-uses ``local[<usable cpus>]``, keeps Spark's scratch inside the
+uses ``local[<usable cpus / 2>]``, keeps Spark's scratch inside the
 benchmark's work directory and exports ``PYTHONPATH`` so Python workers
 can import the engine wherever the process was started from.
 """
@@ -36,6 +36,11 @@ def pin_environment(root: str, work: str) -> dict:
     """Set the process environment every session of this run inherits and
     return it as a record for the result."""
     cpus = len(os.sched_getaffinity(0))
+    # Every task slot running the pandas UDF keeps a JVM task thread and a
+    # Python worker busy at once, next to the JIT, GC and driver threads;
+    # one slot per two cpus keeps the runnable threads within the cpus, so
+    # a run measures the engine rather than the host's scheduler.
+    slots = max(1, cpus // 2)
     heap_mb = max(1024, min(16 * 1024, int(host_ram_bytes() * HEAP_SHARE) >> 20))
     local_dir = os.path.join(work, "spark-local")
     os.makedirs(local_dir, exist_ok=True)
@@ -45,7 +50,7 @@ def pin_environment(root: str, work: str) -> dict:
         ),
         "SPARK_LOCAL_DIRS": local_dir,
         "SPARK_GRAFT_LOCAL_DIR": local_dir,
-        "SPARK_GRAFT_CPUS": str(cpus),
+        "SPARK_GRAFT_CPUS": str(slots),
         "SPARK_GRAFT_DRIVER_MEM": f"{heap_mb}m",
         "PYSPARK_PYTHON": sys.executable,
     })
@@ -54,7 +59,8 @@ def pin_environment(root: str, work: str) -> dict:
 
     return {
         "cpus": cpus,
-        "master": f"local[{cpus}]",
+        "task_slots": slots,
+        "master": f"local[{slots}]",
         "heap_mb": heap_mb,
         "host_ram_mb": host_ram_bytes() >> 20,
         "spark": pyspark.__version__,
