@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .patterns import patterns_map_for
+from .patterns import field_matches, fields_map
 
 # recognized non-NANP calling codes (two-digit first so the regex
 # alternation prefers the longest match; '7' last)
@@ -40,22 +40,32 @@ CONTACT_BLOCK_PATTERNS = [
 
 
 def canonical_phone(p: Column) -> Column:
-    digits = F.regexp_replace(p, r"[^0-9]", "")
-    ten = F.when(
-        (F.length(digits) == 11) & digits.startswith("1"), F.substring(digits, 2, 10)
-    ).when(F.length(digits) == 10, digits)
-    valid = ten.isNotNull() & ten.rlike("^[2-9][0-9]{2}[2-9][0-9]{6}$")
-    formatted = F.format_string(
-        "+1 %s-%s-%s",
-        F.substring(ten, 1, 3),
-        F.substring(ten, 4, 3),
-        F.substring(ten, 7, 4),
+    # HOF lambdas get no subexpression elimination, and this runs inside
+    # the phone list's transform: bind the digit string and the country
+    # code once through a one-element transform instead of re-running their
+    # regexes at every use below
+    def from_parts(parts: Column) -> Column:
+        digits, cc = parts["digits"], parts["cc"]
+        ten = F.when(
+            (F.length(digits) == 11) & digits.startswith("1"), F.substring(digits, 2, 10)
+        ).when(F.length(digits) == 10, digits)
+        valid = ten.isNotNull() & ten.rlike("^[2-9][0-9]{2}[2-9][0-9]{6}$")
+        formatted = F.format_string(
+            "+1 %s-%s-%s",
+            F.substring(ten, 1, 3),
+            F.substring(ten, 4, 3),
+            F.substring(ten, 7, 4),
+        )
+        national = F.regexp_replace(digits, F.concat(F.lit("^"), cc), F.lit(""))
+        intl_valid = (cc != "") & F.length(national).between(8, 12)
+        intl_formatted = F.concat(F.lit("+"), cc, F.lit(" "), national)
+        return F.when(valid, formatted).when(intl_valid, intl_formatted).otherwise(p)
+
+    parts = F.struct(
+        F.regexp_replace(p, r"[^0-9]", "").alias("digits"),
+        F.regexp_extract(F.trim(p), _INTL_CC_RE, 1).alias("cc"),
     )
-    cc = F.regexp_extract(F.trim(p), _INTL_CC_RE, 1)
-    national = F.regexp_replace(digits, F.concat(F.lit("^"), cc), F.lit(""))
-    intl_valid = (cc != "") & F.length(national).between(8, 12)
-    intl_formatted = F.concat(F.lit("+"), cc, F.lit(" "), national)
-    return F.when(valid, formatted).when(intl_valid, intl_formatted).otherwise(p)
+    return F.try_element_at(F.transform(F.array(parts), from_parts), F.lit(1))
 
 
 def contact_blocks(text: Column) -> Column:
@@ -71,17 +81,21 @@ def contact_blocks(text: Column) -> Column:
     return F.filter(cleaned, lambda b: F.length(b) > 10)
 
 
-def contacts_map(text: Column) -> Column:
-    base = patterns_map_for(text, "contact")
+def contacts_from(fields: dict[str, Column], blocks: Column) -> Column:
+    """Contacts map from ``field_matches(text, "contact")`` and
+    ``contact_blocks(text)``."""
     # canonicalize the phone list in place
     base = F.transform_values(
-        base,
+        fields_map(fields),
         lambda k, v: F.when(
             k == "phone", F.transform(v, canonical_phone)
         ).otherwise(v),
     )
-    blocks = contact_blocks(text)
     with_blocks = F.map_concat(
         base, F.create_map(F.lit("contact_blocks"), blocks)
     )
     return F.when(F.size(blocks) > 0, with_blocks).otherwise(base)
+
+
+def contacts_map(text: Column) -> Column:
+    return contacts_from(field_matches(text, "contact"), contact_blocks(text))

@@ -25,13 +25,20 @@ def _count(text: Column, pattern: str) -> Column:
     ).cast("long")
 
 
-def features_struct(text: Column) -> Column:
+def features_from(text: Column, persons: Column, orgs: Column) -> Column:
+    """Feature struct from the PERSON and ORG ``entity_matches`` arrays."""
     return F.struct(
         _count(text, _EMAIL).alias("email_count"),
         _count(text, _PHONE).alias("phone_count"),
         _count(text, _CURRENCY).alias("currency_count"),
         _count(text, _DATE).alias("date_count"),
-        F.size(entity_matches(text, "PERSON", dedup=False)).cast("long").alias("person_count"),
-        F.size(entity_matches(text, "ORG", dedup=False)).cast("long").alias("org_count"),
+        F.size(persons).cast("long").alias("person_count"),
+        F.size(orgs).cast("long").alias("org_count"),
         F.length(text).cast("long").alias("text_length"),
+    )
+
+
+def features_struct(text: Column) -> Column:
+    return features_from(
+        text, entity_matches(text, "PERSON"), entity_matches(text, "ORG")
     )

@@ -25,17 +25,21 @@ HOLDER_PATTERNS = [
 ]
 
 
-def holder_names_struct(text: Column) -> Column:
-    """STRUCT<candidate_names ARRAY<STRING>, primary_name STRING>."""
-    pattern_names = F.concat(
+def holder_matches(text: Column) -> Column:
+    """ARRAY<STRING> of the six anchored patterns' captures, in pattern
+    order."""
+    return F.concat(
         *[
             F.coalesce(F.regexp_extract_all(text, F.lit(p), 1), F.array())
             for p in HOLDER_PATTERNS
         ]
     )
-    all_names = F.array_distinct(
-        F.concat(pattern_names, entity_matches(text, "PERSON"))
-    )
+
+
+def holder_names_from(text: Column, holder: Column, persons: Column) -> Column:
+    """STRUCT<candidate_names ARRAY<STRING>, primary_name STRING> from
+    ``holder_matches(text)`` and the PERSON ``entity_matches`` array."""
+    all_names = F.array_distinct(F.concat(holder, persons))
     filtered = F.filter(
         all_names,
         lambda n: (F.size(F.split(F.trim(n), r"\s+")) >= 2) & (F.length(n) > 4),
@@ -74,3 +78,7 @@ def holder_names_struct(text: Column) -> Column:
     return F.struct(
         candidates.alias("candidate_names"), primary.alias("primary_name")
     )
+
+
+def holder_names_struct(text: Column) -> Column:
+    return holder_names_from(text, holder_matches(text), entity_matches(text, "PERSON"))

@@ -99,12 +99,12 @@ CUE_PATTERNS: dict[str, list[tuple[str, bool]]] = {
 }
 
 
-def entity_matches(text: Column, label: str, dedup: bool = True) -> Column:
-    """ARRAY<STRING> of matches for one entity label (order-preserving dedup,
-    matching the reference's membership-check-before-append, reference:
-    src/document_parser.py:455-458). Concatenation order is part of the
-    spec: lexicon matches first, then each cue pattern in declaration
-    order — the oracle replicates it exactly."""
+def entity_matches(text: Column, label: str) -> Column:
+    """ARRAY<STRING> of every match for one entity label, duplicates kept
+    (feature counts and the invoice backfill need them; ``entities_from``
+    dedups). Concatenation order is part of the spec: lexicon matches
+    first, then each cue pattern in declaration order — the oracle
+    replicates it exactly."""
     pat, grp = NER_PATTERNS[label]
     arr = F.coalesce(F.regexp_extract_all(text, F.lit(pat), grp), F.array())
     for cue_pat, is_list in CUE_PATTERNS.get(label, []):
@@ -112,15 +112,21 @@ def entity_matches(text: Column, label: str, dedup: bool = True) -> Column:
         if is_list:
             cue = F.flatten(F.transform(cue, lambda r: F.split(r, r",\s*")))
         arr = F.concat(arr, cue)
-    return F.array_distinct(arr) if dedup else arr
+    return arr
+
+
+def entities_from(matches: dict[str, Column]) -> Column:
+    """MAP with all six labels always present (reference initializes every
+    key, src/document_parser.py:446-453), built from each label's
+    ``entity_matches`` array with order-preserving dedup (the reference's
+    membership-check-before-append, src/document_parser.py:455-458)."""
+    keys = F.array(*[F.lit(lbl) for lbl in ENTITY_LABELS])
+    vals = F.array(*[F.array_distinct(matches[lbl]) for lbl in ENTITY_LABELS])
+    return F.map_from_arrays(keys, vals)
 
 
 def entities_map(text: Column) -> Column:
-    """MAP with all six labels always present (reference initializes every
-    key, src/document_parser.py:446-453)."""
-    keys = F.array(*[F.lit(lbl) for lbl in ENTITY_LABELS])
-    vals = F.array(*[entity_matches(text, lbl) for lbl in ENTITY_LABELS])
-    return F.map_from_arrays(keys, vals)
+    return entities_from({lbl: entity_matches(text, lbl) for lbl in ENTITY_LABELS})
 
 
 def spacy_model_available(model: str = "en_core_web_sm") -> bool:

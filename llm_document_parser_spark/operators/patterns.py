@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .ner import entity_matches
+
 # (field, java_pattern, group_index) per doc type
 PATTERNS: dict[str, list[tuple[str, str, int]]] = {
     "invoice": [
@@ -94,24 +96,30 @@ PATTERNS: dict[str, list[tuple[str, str, int]]] = {
 }
 
 
-def patterns_map_for(text: Column, doc_type: str) -> Column:
-    """MAP<STRING, ARRAY<STRING>> of deduped matches for one doc type,
-    keeping only fields that matched (reference: src/document_parser.py:409-412)."""
-    fields = PATTERNS[doc_type]
-    keys = F.array(*[F.lit(f) for f, _, _ in fields])
-    vals = F.array(
-        *[
-            F.array_distinct(
-                F.coalesce(F.regexp_extract_all(text, F.lit(p), g), F.array())
-            )
-            for _, p, g in fields
-        ]
-    )
+def _matches(text: Column, pattern: str, group: int) -> Column:
+    return F.coalesce(F.regexp_extract_all(text, F.lit(pattern), group), F.array())
+
+
+def field_matches(text: Column, doc_type: str) -> dict[str, Column]:
+    """Every match per field of one doc type, duplicates kept, in
+    declaration order."""
+    return {f: _matches(text, p, g) for f, p, g in PATTERNS[doc_type]}
+
+
+def fields_map(matches: dict[str, Column]) -> Column:
+    """MAP<STRING, ARRAY<STRING>> of deduped matches, keeping only fields
+    that matched (reference: src/document_parser.py:409-412)."""
+    keys = F.array(*[F.lit(f) for f in matches])
+    vals = F.array(*[F.array_distinct(v) for v in matches.values()])
     m = F.map_from_arrays(keys, vals)
     return F.map_filter(m, lambda _, v: F.size(v) > 0)
 
 
-def enrich_invoice_patterns(text: Column, base: Column, persons: Column, gpes: Column) -> Column:
+def patterns_map_for(text: Column, doc_type: str) -> Column:
+    return fields_map(field_matches(text, doc_type))
+
+
+def enrich_invoice_patterns(base: Column, persons: Column, gpes: Column) -> Column:
     """X3 — invoice NER backfill (reference: ``extract_invoice_details``,
     src/document_parser.py:416-441): the first PERSON entity with ≥2 name
     parts fills missing ``first_name``/``last_name``; GPE entities fill a
@@ -120,35 +128,61 @@ def enrich_invoice_patterns(text: Column, base: Column, persons: Column, gpes: C
     two_part = F.filter(persons, lambda p: F.size(F.split(F.trim(p), r"\s+")) >= 2)
     fp = F.try_element_at(two_part, F.lit(1))
     fp_parts = F.split(F.trim(fp), r"\s+")
-    with_first = F.when(
-        fp.isNotNull() & ~F.map_contains_key(base, F.lit("first_name")),
-        F.create_map(F.lit("first_name"), F.array(F.try_element_at(fp_parts, F.lit(1)))),
-    ).otherwise(F.create_map().cast("map<string,array<string>>"))
-    with_last = F.when(
-        fp.isNotNull() & ~F.map_contains_key(base, F.lit("last_name")),
-        F.create_map(F.lit("last_name"), F.array(F.try_element_at(fp_parts, F.lit(-1)))),
-    ).otherwise(F.create_map().cast("map<string,array<string>>"))
-    with_city = F.when(
-        (F.size(gpes) > 0) & ~F.map_contains_key(base, F.lit("city")),
-        F.create_map(F.lit("city"), gpes),
-    ).otherwise(F.create_map().cast("map<string,array<string>>"))
-    return F.map_concat(base, with_first, with_last, with_city)
+    none = F.create_map().cast("map<string,array<string>>")
+
+    def enrich(b: Column) -> Column:
+        with_first = F.when(
+            fp.isNotNull() & ~F.map_contains_key(b, F.lit("first_name")),
+            F.create_map(F.lit("first_name"), F.array(F.try_element_at(fp_parts, F.lit(1)))),
+        ).otherwise(none)
+        with_last = F.when(
+            fp.isNotNull() & ~F.map_contains_key(b, F.lit("last_name")),
+            F.create_map(F.lit("last_name"), F.array(F.try_element_at(fp_parts, F.lit(-1)))),
+        ).otherwise(none)
+        with_city = F.when(
+            (F.size(gpes) > 0) & ~F.map_contains_key(b, F.lit("city")),
+            F.create_map(F.lit("city"), gpes),
+        ).otherwise(none)
+        return F.map_concat(b, with_first, with_last, with_city)
+
+    # a one-element transform binds ``base`` once: each plain reference to
+    # it would run every invoice regex again
+    return F.try_element_at(F.transform(F.array(base), enrich), F.lit(1))
 
 
-def patterns_map(text: Column, doc_type: Column) -> Column:
+def patterns_from(
+    text: Column,
+    doc_type: Column,
+    contact: dict[str, Column],
+    persons: Column,
+    gpes: Column,
+) -> Column:
     """Doc-type-dispatched pattern extraction; unknown types fall back to
     'general' (reference: src/document_parser.py:406-407). Invoices get the
     X3 NER backfill (reference: src/document_parser.py:778-781 dispatches
-    invoices through extract_invoice_details)."""
-    from .ner import entity_matches
+    invoices through extract_invoice_details).
 
+    ``contact`` is ``field_matches(text, "contact")``; invoice fields with
+    the same name and pattern (email, address) read it instead of scanning
+    the text again. ``persons``/``gpes`` are ``entity_matches`` arrays."""
     expr = patterns_map_for(text, "general")
-    for dt in ("receipt", "contract", "contact"):
+    for dt in ("receipt", "contract"):
         expr = F.when(doc_type == dt, patterns_map_for(text, dt)).otherwise(expr)
-    invoice = enrich_invoice_patterns(
+    expr = F.when(doc_type == "contact", fields_map(contact)).otherwise(expr)
+    shared = set(PATTERNS["contact"])
+    invoice = {
+        f: contact[f] if (f, p, g) in shared else _matches(text, p, g)
+        for f, p, g in PATTERNS["invoice"]
+    }
+    invoice_map = enrich_invoice_patterns(fields_map(invoice), persons, gpes)
+    return F.when(doc_type == "invoice", invoice_map).otherwise(expr)
+
+
+def patterns_map(text: Column, doc_type: Column) -> Column:
+    return patterns_from(
         text,
-        patterns_map_for(text, "invoice"),
-        entity_matches(text, "PERSON", dedup=False),
-        entity_matches(text, "GPE", dedup=False),
+        doc_type,
+        field_matches(text, "contact"),
+        entity_matches(text, "PERSON"),
+        entity_matches(text, "GPE"),
     )
-    return F.when(doc_type == "invoice", invoice).otherwise(expr)

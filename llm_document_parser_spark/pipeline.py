@@ -8,31 +8,53 @@ driver loop (reference: src/batch_processor.py:13-69):
     → doc_kind (native magic-bytes)                       [kind.py]
     → repartition by xxhash64(url) (+optional salt)       [skew balance]
     → payload_text_udf (Arrow pandas UDF: PDF/HTML/text)  [extract_udfs.py]
-    → clean_text (native chain, X2)                       [textclean.py]
-    → document_type (heuristic rules or broadcast model)  [kind.py / ml/]
+      → clean_text (native chain, X2)                     [textclean.py]
+    → document_type (heuristic rules)                     [kind.py]
+      + shared regex match arrays (one projection)        [operators/*]
     → patterns/contacts/names/entities/features (native)  [operators/*]
     → text_spans (native, from patterns)
     → results schema
 
-Everything after the single pandas UDF is whole-stage-codegen'd JVM work; the
-reference's 4× spaCy re-parse per document (reference:
-src/document_parser.py:422,444,525,738) collapses into shared native
-subexpressions here.
+The single pandas UDF is the only Python stage. Everything after it is JVM
+work, but only the clean_text chain is whole-stage-codegen'd: higher-order
+functions (``transform``/``filter``/``map_filter``/``array_sort``) are
+interpreted, and a ``Project`` holding one falls out of whole-stage codegen.
+In the executed plan that is each of the three projections after
+clean_text (shared match arrays, operator assembly, text_spans).
+
+The reference's 4× spaCy re-parse per document (reference:
+src/document_parser.py:422,444,525,738) becomes one projection that runs each
+regex several operators share exactly once per row: the six raw NER label
+arrays, the seven contact-field arrays (which also serve the invoice branch,
+whose email and address patterns are the same strings), the contact blocks
+and the holder-name matches. The operators then assemble their outputs from
+those columns, deduplicating where their spec says so. The projection stays
+separate in the optimized plan because each of its columns is read more
+than once, and Catalyst's CollapseProject does not inline such expressions;
+inlined, every consumer would rescan the text, since subexpression
+elimination does not look inside higher-order functions.
+
+Building the plan's column expressions costs thousands of py4j round trips,
+so they are built once per live JVM and reused: ``_STAGES`` is keyed on the
+identity of ``SparkContext._jvm`` (a ``Column`` is a JVM object, valid only
+in the JVM that made it) and on the NER path. Entries live as long as the
+Python process; there are at most two per JVM.
 """
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .operators.contacts import contacts_map
-from .operators.extract_udfs import payload_text_udf
-from .operators.features import features_struct
-from .operators.kind import doc_kind_col, document_type_col
-from .operators.names import holder_names_struct
 from .operators import ner
-from .operators.ner import entities_map, spacy_entities_stage
-from .operators.patterns import patterns_map
+from .operators.contacts import contact_blocks, contacts_from
+from .operators.extract_udfs import payload_text_udf
+from .operators.features import features_from
+from .operators.kind import doc_kind_col, document_type_col
+from .operators.names import holder_matches, holder_names_from
+from .operators.ner import ENTITY_LABELS, entities_from, entity_matches, spacy_entities_stage
+from .operators.patterns import PATTERNS, field_matches, patterns_from
 from .operators.textclean import clean_text_col
 
 RESULT_COLUMNS = [
@@ -84,10 +106,60 @@ def text_spans_col(text: Column, patterns: Column) -> Column:
     return F.filter(spans, lambda s: s["start"] >= 0)
 
 
+_STAGES: dict[tuple[object, bool], tuple] = {}
+
+
+def _build_stages(use_spacy_ner: bool) -> tuple[Column, Column, list[list[Column]]]:
+    """(doc_kind column, repartition key, the column lists of the ``select``
+    stages after the repartition) — see the module docstring."""
+    text = F.col("extracted_text")
+    star = F.col("*")
+    ner_col = {lbl: F.col(f"_ner_{lbl}") for lbl in ENTITY_LABELS}
+    contact_col = {f: F.col(f"_contact_{f}") for f, _, _ in PATTERNS["contact"]}
+    blocks, holder = F.col("_contact_blocks"), F.col("_holder_names")
+
+    matches = {
+        "document_type": document_type_col(text),
+        **{f"_ner_{lbl}": entity_matches(text, lbl) for lbl in ENTITY_LABELS},
+        **{f"_contact_{f}": m for f, m in field_matches(text, "contact").items()},
+        "_contact_blocks": contact_blocks(text),
+        "_holder_names": holder_matches(text),
+    }
+    outputs = {
+        "patterns": patterns_from(
+            text, F.col("document_type"), contact_col, ner_col["PERSON"], ner_col["GPE"]
+        ),
+        "contacts": contacts_from(contact_col, blocks),
+        "names": holder_names_from(text, holder, ner_col["PERSON"]),
+        "features": features_from(text, ner_col["PERSON"], ner_col["ORG"]),
+        "success": F.length(text) > 0,
+        "error": F.when(
+            F.length(text) == 0,
+            F.lit("No text could be extracted from the document"),
+        ),
+        "processing_time": F.current_timestamp(),
+    }
+    if not use_spacy_ner:
+        outputs["entities"] = entities_from(ner_col)
+    spans = text_spans_col(text, F.col("patterns")).alias("text_spans")
+    result = [
+        spans if c == "text_spans" else F.col(c)
+        for c in RESULT_COLUMNS
+        if not (use_spacy_ner and c == "entities")
+    ]
+    extracted = clean_text_col(payload_text_udf(F.col("html"), F.col("doc_kind")))
+    stages = [
+        [F.col("url"), F.col("warc_ts"), F.col("doc_kind"), extracted.alias("extracted_text")],
+        [star, *[c.alias(n) for n, c in matches.items()]],
+        [star, *[c.alias(n) for n, c in outputs.items()]],
+        result,
+    ]
+    return doc_kind_col(F.col("html")), F.xxhash64("url"), stages
+
+
 def extract_pipeline(
     pages: DataFrame,
     repartition_to: int | None = None,
-    doc_type_col_fn=document_type_col,
     use_spacy_ner: bool | None = None,
     nlp_factory=None,
 ) -> DataFrame:
@@ -105,42 +177,27 @@ def extract_pipeline(
     otherwise OSError on every executor). The spaCy path adds a second Python
     stage AFTER the final projection — it sees only result columns, never
     the binary payload. Pattern backfill and feature person/org counts stay
-    rule-based either way (they're part of the native codegen span).
+    rule-based either way (they're part of the native projections).
     ``nlp_factory`` (executor-side model loader) implies the spaCy path and
     is how tests drive the seam without the library.
     """
     if use_spacy_ner is None:
         use_spacy_ner = nlp_factory is not None or ner.spacy_model_available()
-    df = pages.withColumn("doc_kind", doc_kind_col(F.col("html")))
+    key = (SparkContext._jvm, use_spacy_ner)
+    if key not in _STAGES:
+        _STAGES[key] = _build_stages(use_spacy_ner)
+    doc_kind, repartition_key, stages = _STAGES[key]
+
+    df = pages.withColumn("doc_kind", doc_kind)
     if repartition_to:
-        df = df.repartition(repartition_to, F.xxhash64("url"))
-
-    df = df.withColumn("raw_text", payload_text_udf(F.col("html"), F.col("doc_kind")))
-    df = df.withColumn("extracted_text", clean_text_col(F.col("raw_text")))
-
-    text = F.col("extracted_text")
-    df = df.withColumn("document_type", doc_type_col_fn(text))
-    df = df.withColumn("patterns", patterns_map(text, F.col("document_type")))
-    df = (
-        df.withColumn("contacts", contacts_map(text))
-        .withColumn("names", holder_names_struct(text))
-        .withColumn("features", features_struct(text))
-        .withColumn("text_spans", text_spans_col(text, F.col("patterns")))
-        .withColumn("success", F.length(text) > 0)
-        .withColumn(
-            "error",
-            F.when(
-                F.length(text) == 0,
-                F.lit("No text could be extracted from the document"),
-            ),
-        )
-        .withColumn("processing_time", F.current_timestamp())
-    )
+        df = df.repartition(repartition_to, repartition_key)
+    # select, not withColumns: withColumns ships its names and its columns
+    # as two py4j lists, one round trip per element
+    for cols in stages:
+        df = df.select(*cols)
     if use_spacy_ner:
-        df = df.select([c for c in RESULT_COLUMNS if c != "entities"])
         df = spacy_entities_stage(
             df, text_col="extracted_text", out_col="entities", nlp_factory=nlp_factory
         )
-    else:
-        df = df.withColumn("entities", entities_map(text))
-    return df.select(*RESULT_COLUMNS)
+        df = df.select(*RESULT_COLUMNS)
+    return df

@@ -53,11 +53,12 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(32, cores * 2)
 
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
     conf = {
         # driver heap: only effective for the FIRST session in a process
         # (the JVM persists across SparkSession.stop()); benchmark harnesses
         # must use one subprocess per session — see tools/scaling_bench.py
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.driver.memory": driver_mem,
         # shuffle/scratch space: this sandbox periodically wipes /tmp, which
         # can delete Spark's local dirs mid-job; keep them somewhere durable
         "spark.local.dir": os.environ.get(
@@ -75,7 +76,7 @@ def get_spark(
         **(
             {
                 "spark.driver.extraJavaOptions": (
-                    f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')}"
+                    f"-Xms{driver_mem}"
                     " -XX:+AlwaysPreTouch"
                 )
             }
@@ -121,6 +122,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Half the host's RAM, within 1–16 GB. The heap grows lazily, so a
+    fixed default larger than the host works until a heavy job commits it
+    past physical memory; the other half is left to the Python workers,
+    off-heap buffers and the page cache."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf, or no such name
+        return "16g"
+    return f"{min(16 * 1024, max(1024, ram // 2 // 2**20))}m"
 
 
 def _with_task_retries(master: str, retries: int) -> str:

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from plan_tree import class_name, plan_nodes
 from llm_document_parser_spark.datagen import generate_pages
 from llm_document_parser_spark.pipeline import extract_pipeline
 from llm_document_parser_spark.queries import REGISTRY
@@ -62,10 +63,11 @@ def test_semi_and_anti_joins(spark):
 
 def test_extract_pipeline_has_single_python_stage(spark):
     pages = generate_pages(spark, 10, seed=1, partitions=2)
-    txt = plan_of(extract_pipeline(pages))
+    plan = extract_pipeline(pages)._jdf.queryExecution().executedPlan()
+    classes = [class_name(n) for n in plan_nodes(plan)]
     # exactly one Arrow-batched python eval; everything else JVM-side
-    assert txt.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in txt  # no row-at-a-time python UDFs
+    assert classes.count("ArrowEvalPythonExec") == 1
+    assert "BatchEvalPythonExec" not in classes  # no row-at-a-time python UDFs
 
 
 def test_ann_topk_broadcasts_query_side(spark):

@@ -156,3 +156,17 @@ def test_task_retries_master_rewrite_rules():
     # the parallelism hint must still read the core count, not the pair
     assert _parallelism_hint("local[4,2]") == 4
     assert _parallelism_hint("local[16]") == 16
+
+
+def test_default_driver_memory_is_half_host_ram(monkeypatch):
+    from llm_document_parser_spark import session
+
+    def host(ram_bytes):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": ram_bytes // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        return session._default_driver_memory()
+
+    gib = 2**30
+    assert host(15 * gib) == f"{15 * 1024 // 2}m"
+    assert host(512 * gib) == f"{16 * 1024}m"
+    assert host(1 * gib) == "1024m"
